@@ -81,17 +81,30 @@ object SparkEntry {
     else {
       // derive OUTSIDE the map lock — the derivation runs Spark jobs and
       // computeIfAbsent would hold the bin lock for their whole duration;
-      // a racing loser unpersists its duplicate cache and adopts the winner
+      // a racing loser adopts the winner (see adopt).
       // dedges is cached too: it is read directly (edges, hits) AND is the
       // base every derived edge relation (undirected/prEdges/canonical)
       // materializes from on first use
       val verts = LinkGraph.vertices(Transcripts.fromEvents(spark, dir)).cache()
-      val g = G(verts, LinkGraph.directedEdges(verts).cache(), verts.count())
-      val prev = graphs.putIfAbsent(key, g)
-      if (prev != null) {
-        verts.unpersist(blocking = false); g.dedges.unpersist(blocking = false)
-        prev
-      } else g
+      adopt(key, G(verts, LinkGraph.directedEdges(verts).cache(), verts.count()))
+    }
+  }
+
+  /** Registers `g` unless a racing derivation got there first, and returns
+   * the registered bundle. A racing loser adopts the winner and drops its
+   * own duplicate caches — except a relation whose plan matches the
+   * winner's: its `cache()` was a no-op on the winner's entry, and the
+   * unpersist would evict the WINNER's cache by plan match. (A fresh
+   * derivation of the same table does not plan-match today, so the loser's
+   * caches are real duplicates and must go.) */
+  private[graft] def adopt(key: (SparkSession, String), g: G): G = {
+    val prev = graphs.putIfAbsent(key, g)
+    if (prev == null) g
+    else {
+      for ((mine, winners) <- Seq(g.verts -> prev.verts, g.dedges -> prev.dedges)
+           if !mine.queryExecution.analyzed.sameResult(winners.queryExecution.analyzed))
+        mine.unpersist(blocking = false)
+      prev
     }
   }
 

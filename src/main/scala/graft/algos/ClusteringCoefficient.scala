@@ -10,8 +10,9 @@ import org.apache.spark.sql.functions._
  * analog (see TriangleCount's header); standard link-graph analytics the
  * north rule's triangle requirement implies.
  *
- * Scale: inherits TriangleCount's O(m^1.5) wedge bound and hub-free
- * orientation; the degree aggregate is one partial-agg'd shuffle; the
+ * Scale: inherits TriangleCount's O(m^1.5) wedge bound, hub-free
+ * orientation and execution scope (the whole plan runs at its adaptive
+ * width, AQE off); the degree aggregate is one partial-agg'd shuffle; the
  * final join is vid-keyed equi-join over |V| rows per side.
  */
 object ClusteringCoefficient {
@@ -20,9 +21,10 @@ object ClusteringCoefficient {
    *  @param undirected symmetrized edge set (for degrees)
    *  @param vertices   all vertices (coeff 0 when triangle- or degree-free) */
   def local(canonical: DataFrame, undirected: DataFrame, vertices: DataFrame): DataFrame = {
-    val deg = undirected.groupBy(col("src").as("vid")).agg(count(lit(1)).as("deg"))
-    val tri = TriangleCount.perVertex(canonical)
-    vertices.select("vid")
+    val scope = TriangleCount.scopeOf(canonical)
+    val deg = scope(undirected).groupBy(col("src").as("vid")).agg(count(lit(1)).as("deg"))
+    val tri = TriangleCount.counts(scope(canonical))
+    scope(vertices).select("vid")
       .join(deg, Seq("vid"), "left_outer")
       .join(tri, Seq("vid"), "left_outer")
       .select(col("vid"),

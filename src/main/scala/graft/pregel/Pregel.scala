@@ -2,6 +2,7 @@ package graft.pregel
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftx.EngineScope
 import org.apache.spark.sql.graftx.PartitionedCheckpoint.localCheckpointHashed
 import org.apache.spark.storage.StorageLevel
 
@@ -77,13 +78,14 @@ case class PregelConfig(
      * fused plan's own optimization/codegen overhead (measured r6). */
     fuseMinEdges: Long = 1L << 20,
     /** Scale-adaptive partitioning (guide §2): the effective partition
-     * count is min(numPartitions, ceil(edges / targetEdgesPerPartition))
-     * so a small graph doesn't pay numPartitions tasks per stage per
-     * superstep (25-superstep fixture runs were ~90% task-launch
-     * overhead at 32 partitions). numPartitions stays the cap — on a
-     * cluster it is sized to cores/executors and big graphs use all of
-     * it. <= 0 disables adaptivity (always numPartitions). */
-    targetEdgesPerPartition: Long = 32768L)
+     * count p is min(numPartitions, ceil(edges / targetEdgesPerPartition))
+     * ([[EngineScope.width]]) so a small graph doesn't pay numPartitions
+     * tasks per stage per superstep (25-superstep fixture runs were ~90%
+     * task-launch overhead at 32 partitions). numPartitions stays the cap —
+     * on a cluster it is sized to cores/executors and big graphs use all of
+     * it. Setup and the loop run at width p. <= 0 disables adaptivity
+     * (always numPartitions). */
+    targetEdgesPerPartition: Long = EngineScope.DefaultRowsPerPartition)
 
 /**
  * The superstep kernel — Spark-native analog of the reference's BSP driver
@@ -129,35 +131,70 @@ final class Pregel(spark: SparkSession, cfg: PregelConfig = PregelConfig()) {
     // packing read them, and the caller usually hands us a lazy derivation
     // (symmetrize/self-loops over the transcript graph) that would
     // otherwise execute twice. Unpersisted right after the packed relation
-    // materializes below.
-    val setupT0 = System.nanoTime()
-    def setupMark(tag: String): Unit = if (sys.env.contains("GRAFT_PHASES"))
-      println(f"[setup] $tag at ${(System.nanoTime() - setupT0) / 1e9}%.2fs")
+    // materializes.
     // If the caller already cached the edge relation (e.g. a shared
     // derivation bundle reused across queries), don't re-persist it here —
     // and, more importantly, don't unpersist it at the end: evicting a
     // caller's cache would silently re-derive the relation for the next
     // query that shares it.
     val callerCached = edges.storageLevel != StorageLevel.NONE
-    val ec = if (callerCached) edges else edges.persist(StorageLevel.MEMORY_AND_DISK)
+    val staged = if (callerCached) edges else edges.persist(StorageLevel.MEMORY_AND_DISK)
+    val release = new SetupRelations(if (callerCached) None else Some(staged))
+    try {
+      // Execution regime (see EngineScope): the staging count runs under
+      // the CALLER's regime — a lazy derivation keeps AQE's coalescing, as
+      // the caller would run it — and sizes the adaptive width p.
+      // Everything after it (stats, hot list, packing, static base, initial
+      // state, supersteps, checkpoint I/O) runs in a clone of the caller's
+      // session with AQE off and shuffle width p: AQE's per-stage
+      // re-optimization adds driver round-trips and, on a small graph, fans
+      // each setup plan out into many concurrent stage jobs for zero
+      // benefit on plans whose layouts the kernel pins itself, and the
+      // width keeps the combine output exactly co-partitioned with the
+      // hash(vid, p) state. The caller's own conf is never written, so
+      // every exit path leaves it as found. The returned state belongs to
+      // the scope.
+      val edgeCount = staged.count()
+      val scope = EngineScope(spark, EngineScope.width(edgeCount, cfg.numPartitions, cfg.targetEdgesPerPartition))
+      val out = runScoped(program, scope, scope(vertices), scope(staged), edgeCount, release)
+      release()
+      out
+    } catch {
+      case e: Throwable =>
+        // a failed run (setup, unreadable snapshot, a crashed superstep)
+        // must not leak cached relations into the surviving session
+        release()
+        throw e
+    }
+  }
+
+  /** Setup and superstep loop of [[run]], inside the engine scope: `verts`
+   * and `ec` (the staged edges) are bound to `scope`, whose width is the
+   * run's partition count p. Every setup relation pinned here is
+   * registered with `release`. */
+  private def runScoped(program: VertexProgram, scope: EngineScope, verts: DataFrame, ec: DataFrame,
+                        edgeCount: Long, release: SetupRelations): (DataFrame, Seq[SuperstepMetrics]) = {
+    val p = scope.width
+    val setupT0 = System.nanoTime()
+    def setupMark(tag: String): Unit = if (sys.env.contains("GRAFT_PHASES"))
+      println(f"[setup] $tag at ${(System.nanoTime() - setupT0) / 1e9}%.2fs")
+    import release.hold
     // per-source out-degree + dst bounds in ONE aggregation: the degree
     // relation, the global degree stats, AND the L5 per-block stats all
     // derive from this single |E| pass (block aggregates roll up from the
     // per-source rows — no second scan of the edge relation)
-    val deg = ec.groupBy(col("src").as("vid")).agg(
+    val deg = hold(ec.groupBy(col("src").as("vid")).agg(
         count(lit(1)).as("outdeg"),
         min(col("dst")).as("_dmin"), max(col("dst")).as("_dmax"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK))
     // Empty-vertex guard: fail soft (empty result, no supersteps) instead of
     // an NPE out of head() below — a user's first empty partition should not
     // be a 500-line stack trace.
-    val maxVidRow = vertices.agg(max(col("vid"))).head()
+    val maxVidRow = verts.agg(max(col("vid"))).head()
     if (maxVidRow.isNullAt(0)) {
       val emptyState = program.initState(
-        vertices.join(deg.select("vid", "outdeg"), Seq("vid"), "left_outer")
+        verts.join(deg.select("vid", "outdeg"), Seq("vid"), "left_outer")
           .withColumn("outdeg", coalesce(col("outdeg"), lit(0L))))
-      if (!callerCached) ec.unpersist(blocking = false)
-      deg.unpersist(blocking = false)
       return (emptyState, Seq.empty)
     }
     setupMark("vertices-maxvid")
@@ -168,8 +205,8 @@ final class Pregel(spark: SparkSession, cfg: PregelConfig = PregelConfig()) {
     // relation and held on the driver (<= numBlocks rows). Feeds the cost
     // model's pull-fragment volume (sum of edge counts over responding
     // blocks) — the reference's dependency-matrix sizing. The same collect
-    // yields the global edge count and max out-degree (the hub cut), so
-    // setup pays ONE stats job, not three.
+    // yields the max out-degree (the hub cut), so setup pays ONE stats
+    // job, not two.
     val blkRows = deg.groupBy(expr(s"vid div $blkLen").as("blk"))
       .agg(sum(col("outdeg")).as("cnt"), max(col("outdeg")).as("maxdeg"),
         min(col("_dmin")).as("dmin"), max(col("_dmax")).as("dmax"))
@@ -178,16 +215,7 @@ final class Pregel(spark: SparkSession, cfg: PregelConfig = PregelConfig()) {
       .map(r => r.getLong(0) -> BlockEdgeStats(r.getLong(1), r.getLong(3), r.getLong(4)))
       .toMap
     setupMark("deg-blk-stats")
-    val edgeCount = blkRows.iterator.map(_.getLong(1)).sum
     val maxOutdeg = if (blkRows.isEmpty) 0L else blkRows.iterator.map(_.getLong(2)).max
-    // Scale-adaptive effective partition count (guide §2): derived from
-    // the measured edge count, capped at the configured parallelism. Every
-    // relation the superstep loop touches (packed adjacency, fragments,
-    // state, overlays) is partitioned at this width.
-    val p =
-      if (cfg.targetEdgesPerPartition <= 0) cfg.numPartitions
-      else math.min(cfg.numPartitions.toLong,
-        math.max(1L, (edgeCount + cfg.targetEdgesPerPartition - 1) / cfg.targetEdgesPerPartition)).toInt
     val hubCut = math.max(cfg.saltMinDeg, 2L * edgeCount / math.max(1, p))
     // At most p/2 sources can have out-degree >= 2*edges/p (they'd exceed
     // the edge total otherwise), so the hot list is always a handful of
@@ -219,7 +247,7 @@ final class Pregel(spark: SparkSession, cfg: PregelConfig = PregelConfig()) {
     // relation whose per-(src, salt) chunks spread over all partitions,
     // joined against a BROADCAST of the (few) hot senders — salting then
     // costs nothing for the cold 99.99% of the graph.
-    val hasWeight = edges.columns.contains("weight")
+    val hasWeight = ec.columns.contains("weight")
     val edgeStruct =
       if (hasWeight) struct(col("dst"), col("weight"))
       else struct(col("dst"))
@@ -249,24 +277,24 @@ final class Pregel(spark: SparkSession, cfg: PregelConfig = PregelConfig()) {
     // A LogicalRDD has no lineage to rewrite, so no plan can unhitch it.
     val adjBase: PackedAdj =
       if (hotVids.isEmpty) {
-        val packed = localCheckpointHashed(
+        val packed = hold(localCheckpointHashed(
           ec.groupBy(col("src")).agg(collect_list(edgeStruct).as("_adj"))
-            .repartition(p, col("src")), Seq("src"), p)
+            .repartition(p, col("src")), Seq("src"), p))
         setupMark("pack-cold-all")
         PackedAdj(packed, None, hotVids)
       } else {
         val hotSeq = hotVids.toIndexedSeq
-        val cold = localCheckpointHashed(
+        val cold = hold(localCheckpointHashed(
           ec.filter(!col("src").isin(hotSeq: _*))
             .groupBy(col("src")).agg(collect_list(edgeStruct).as("_adj"))
-            .repartition(p, col("src")), Seq("src"), p)
+            .repartition(p, col("src")), Seq("src"), p))
         setupMark("pack-cold")
-        val hot = localCheckpointHashed(
-          Pregel.saltedHot(ec, hotSeq, p, edgeStruct), Seq("src", "_salt"), p)
+        val hot = hold(localCheckpointHashed(
+          Pregel.saltedHot(ec, hotSeq, p, edgeStruct), Seq("src", "_salt"), p))
         setupMark("pack-hot")
         PackedAdj(cold, Some(hot), hotVids)
       }
-    if (!callerCached) ec.unpersist(blocking = false)
+    release.unstage()
     // In-edge fragment relation for the shuffle-gather pull path (built
     // lazily on the first PullShuffle superstep — most runs never pay for
     // it): dst-keyed fragments indexed by SOURCE block, rebuilt from the
@@ -282,17 +310,17 @@ final class Pregel(spark: SparkSession, cfg: PregelConfig = PregelConfig()) {
       }
       val cols = Seq(col("src"), col("_e.dst").as("dst")) ++
         (if (hasWeight) Seq(col("_e.weight").as("weight")) else Nil)
-      val ia = localCheckpointHashed(
+      val ia = hold(localCheckpointHashed(
         Pregel.packInFragments(flat.select(cols: _*), blkLen, p, hasWeight),
-        Seq("dst"), p)
+        Seq("dst"), p))
       inAdjCache = Some(ia)
       ia
     })
     val cost = new CostModel(cfg.mode, cfg.numExecutors, cfg.broadcastCapBytes)
-    val ckpt = cfg.checkpointDir.map(d => new Checkpoint(spark, d, program.name))
+    val ckpt = cfg.checkpointDir.map(d => new Checkpoint(scope.session, d, program.name))
     val ckptPolicy = new CheckpointPolicy
 
-    val vertsWithDeg = vertices.join(deg.select("vid", "outdeg"), Seq("vid"), "left_outer")
+    val vertsWithDeg = verts.join(deg.select("vid", "outdeg"), Seq("vid"), "left_outer")
       .withColumn("outdeg", coalesce(col("outdeg"), lit(0L)))
 
     // Programs whose update() is a pure function of (static vertex cols,
@@ -304,46 +332,8 @@ final class Pregel(spark: SparkSession, cfg: PregelConfig = PregelConfig()) {
     // superstep plan and feed the DeduplicateRelations cache-bust.
     val staticBase =
       if (program.usesPriorState) None
-      else Some(localCheckpointHashed(
-        vertsWithDeg.repartition(p, col("vid")), Seq("vid"), p))
-
-    // Superstep-loop execution regime: AQE OFF and shuffle width = p for
-    // the loop, restored on every exit path (the loop's catch and the
-    // normal exit both go through releaseSetupRelations). AQE's per-query-
-    // stage re-optimization adds driver round-trips to every superstep's
-    // critical path for zero benefit on plans whose shapes the kernel
-    // already pins (the same reason Bench's scaling sessions run AQE-off),
-    // and pinning the shuffle width keeps the combine output exactly
-    // co-partitioned with the hash(vid, p) state. Setup above (derivation
-    // aggregates, packing) stays under the session's own regime — its
-    // explicit repartition(p, keys) exchanges fix the checkpointed
-    // layouts regardless, and AQE's coalescing helps the derivation.
-    val confKV = Seq(
-      "spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.shuffle.partitions" -> p.toString)
-    val priorConf = confKV.map { case (k, _) => k -> spark.conf.getOption(k) }
-    def restoreConf(): Unit = priorConf.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-
-    // Drop every setup-time relation this run pinned in the block manager:
-    // the persisted cold adjacency / degree / static-base caches AND the
-    // eagerly localCheckpointed hot adjacency + in-edge fragment relations.
-    // Dataset.unpersist can't reach the latter two — their storage lives
-    // behind the checkpointed RDD, not the CacheManager, so leaving them
-    // to ContextCleaner GC leaked block-manager storage into the surviving
-    // session (ADVICE r4). Runs on BOTH the normal and the crash exit.
-    def releaseSetupRelations(): Unit = {
-      restoreConf()
-      Pregel.unpersistCheckpointed(adjBase.cold)
-      deg.unpersist(blocking = false)
-      staticBase.foreach(Pregel.unpersistCheckpointed)
-      adjBase.hot.foreach(Pregel.unpersistCheckpointed)
-      inAdjCache.foreach(Pregel.unpersistCheckpointed)
-    }
-
-    confKV.foreach { case (k, v) => spark.conf.set(k, v) }
+      else Some(hold(localCheckpointHashed(
+        vertsWithDeg.repartition(p, col("vid")), Seq("vid"), p)))
 
     val resumed = if (cfg.resume) ckpt.flatMap(_.latest()) else None
     // localCheckpoint each superstep: materializes the state AND truncates
@@ -610,13 +600,11 @@ final class Pregel(spark: SparkSession, cfg: PregelConfig = PregelConfig()) {
       t = tEnd + 1
     } catch {
       case e: Throwable =>
-        // a crashed run (incl. the injected-failure hook) must not leak
-        // cached relations into the surviving session
-        releaseSetupRelations()
+        // a crashed superstep must not leak its state into the surviving
+        // session (run() releases the setup relations)
         retireState()
         throw e
     }
-    releaseSetupRelations()
     (view(), metrics.toSeq)
   }
 
@@ -757,6 +745,27 @@ private[graft] object Pregel {
       .agg(collect_list(srcStruct).as("_iadj"))
       .drop("_fsub")
       .repartition(p, col("dst"))
+  }
+}
+
+/** Every setup relation one [[Pregel.run]] pins in the block manager:
+ * persisted caches AND eagerly localCheckpointed relations, whose storage
+ * lives behind the checkpointed RDD where `Dataset.unpersist` can't reach
+ * it (leaving them to ContextCleaner GC leaked block-manager storage into
+ * the surviving session, ADVICE r4). `staged` is the run's own persisted
+ * copy of the input edges (None when the caller cached them). run()
+ * releases all of them on every exit path. */
+private[pregel] final class SetupRelations(staged: Option[DataFrame]) {
+  private val held = scala.collection.mutable.ArrayBuffer[DataFrame]()
+  def hold(df: DataFrame): DataFrame = { held += df; df }
+  /** Drops the staged input edges once the packed adjacency exists. */
+  def unstage(): Unit = staged.foreach(_.unpersist(blocking = false))
+  def apply(): Unit = {
+    unstage()
+    held.foreach { df =>
+      df.unpersist(blocking = false)
+      Pregel.unpersistCheckpointed(df)
+    }
   }
 }
 

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 import graft.graph.{LinkGraph, Transcripts}
+import org.apache.spark.storage.StorageLevel
 
 /** Transcript-table invariants (BASELINE.json input_hint) and edge/vertex
  * derivation properties. */
@@ -87,5 +88,22 @@ class DerivationSpec extends SparkTestBase {
     val weighted = g.undirected.select(col("src"), col("dst"), graft.algos.SSSP.weightCol)
     val (_, ms) = p.run(new graft.algos.SSSP(0L, SparkEntry.SSSP_ITERS), g.verts.select("vid"), weighted)
     assert(ms.last.respondCount == 0, s"SSSP must converge within ${SparkEntry.SSSP_ITERS} supersteps at sf0.001")
+  }
+
+  test("a graphOf race loser adopts the winner, releases its duplicates, keeps the winner's caches") {
+    val dir = "/root/testdata/sf0.001"
+    val winner = SparkEntry.graphOf(spark, dir)
+    def cached(df: org.apache.spark.sql.DataFrame) = df.storageLevel != StorageLevel.NONE
+    // a fresh derivation: its caches are separate entries, released on adopt
+    val verts = LinkGraph.vertices(Transcripts.fromEvents(spark, dir)).cache()
+    val loser = SparkEntry.G(verts, LinkGraph.directedEdges(verts).cache(), verts.count())
+    assert(SparkEntry.adopt((spark, dir), loser) eq winner)
+    assert(!cached(loser.verts) && !cached(loser.dedges), "loser's duplicate caches leaked")
+    assert(cached(winner.verts) && cached(winner.dedges), "winner's caches were evicted")
+    // a plan-identical loser: its cache() calls were no-ops on the winner's
+    // entries, so an unpersist would evict the winner's caches by match
+    val twin = SparkEntry.G(winner.verts.cache(), winner.dedges.cache(), winner.n)
+    assert(SparkEntry.adopt((spark, dir), twin) eq winner)
+    assert(cached(winner.verts) && cached(winner.dedges), "winner's caches were evicted by a plan match")
   }
 }
